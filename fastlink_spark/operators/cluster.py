@@ -11,18 +11,16 @@ chain-y duplicate graphs.
 
 Driver-looped DataFrame program: each round is two shuffles
 (groupBy-min + join); lineage cut per round via the injectable
-``materializer`` (default DISK_ONLY localCheckpoint; pass
-``plans.materialize.parquet_materializer`` for the fault-tolerant
-production shape) so the plan doesn't grow unboundedly; convergence =
-edge-set fixpoint (count + order-insensitive xxhash64 checksum). An
-optional on-disk checkpoint callback lets the pipeline persist each
-round for resume (BASELINE.json north_rule).
+``materializer`` (default ``plans.materialize.resolve(None)``: parquet
+cuts on the discovered scratch root, DISK_ONLY localCheckpoint only
+when no shared root is knowable) so the plan doesn't grow unboundedly;
+convergence = edge-set fixpoint (count + order-insensitive xxhash64
+checksum).
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,7 +73,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     *,
     max_iter: int | None = None,
-    on_round: Callable[[int, DataFrame], DataFrame] | None = None,
     materializer: Materializer | None = None,
 ) -> DataFrame:
     """Edges ``(u, v)`` (any orientation; any orderable id type — long
@@ -86,11 +83,8 @@ def connected_components(
 
     `nodes`: optional single-column ('id') universe; nodes without edges
     come back as singleton clusters (cluster_id = id).
-    `on_round`: hook called with (round_idx, edges) after each
-    large+small round; may return a re-materialized DataFrame (used by
-    the pipeline to checkpoint rounds to disk for resume).
     `materializer`: per-round lineage cut (plans.materialize; default
-    DISK_ONLY localCheckpoint, parquet for the production shape).
+    the scratch-aware parquet cut of ``resolve(None)``).
     """
     mat = resolve(materializer)
     e0 = edges.select(
@@ -112,16 +106,12 @@ def connected_components(
         # practice; generous bound, asserted below.
         max_iter = max(10, 2 * int(math.log2(max(n_edges, 2))) + 10)
     converged = False
-    for it in range(1, max_iter + 1):
+    for _ in range(max_iter):
         # large-star output is strictly oriented + distinct, so
         # small-star skips its re-orientation exchange (see _small_star)
         ss = _small_star(_large_star(e), oriented=True)
         ss, _fp = fingerprint_observation(ss)
         e2 = mat(ss, "cc_round")
-        if on_round is not None:
-            maybe = on_round(it, e2)
-            if maybe is not None:
-                e2 = maybe
         cur = _fp(fallback_df=e2)[1]
         e = e2
         if cur == prev:

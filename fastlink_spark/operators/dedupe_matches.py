@@ -244,7 +244,7 @@ def dedupe_matches(
         # Roll the accumulated union through a retained cut every round:
         # `accepted` only ever references the NEWEST 'greedy_accepted'
         # cut, so a parquet materializer's retention (keep newest
-        # keep_per_name cuts per name) can never delete data still
+        # KEEP_PER_NAME cuts per name) can never delete data still
         # reachable from it. Unioning raw mutual cuts instead would
         # keep round-0's 'greedy_mutual' parquet live while round-2's
         # write deletes it (materialize.py retention contract).

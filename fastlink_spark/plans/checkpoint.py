@@ -121,6 +121,14 @@ class CheckpointManager:
         # downstream tokens chain these so upstream content changes
         # invalidate automatically
         self.fingerprints: dict[str, str] = {}
+        if root is not None:
+            # operator scratch left by a prior RUN on this root (a
+            # shorter re-run would otherwise leave higher-suffix round
+            # dirs behind forever); once per manager, never mid-run — a
+            # later wipe could delete scratch that live frames read
+            import shutil
+
+            shutil.rmtree(os.path.join(root, "_op_stages"), ignore_errors=True)
 
     def _paths(self, name: str) -> tuple[str, str]:
         assert self.root is not None
@@ -132,7 +140,6 @@ class CheckpointManager:
         build: Callable[[], DataFrame],
         *,
         inputs: tuple[str, ...] = (),
-        partition_counters: bool = True,
         extra_token: str = "",
     ) -> DataFrame:
         """Build-or-resume one stage; records lineage + counters +
@@ -195,13 +202,12 @@ class CheckpointManager:
             "fingerprint": fingerprint,
             "schema": out.schema.jsonValue(),
         }
-        if partition_counters:
-            per_part = (
-                out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"))
-                .collect()
-            )
-            man["partitions"] = {int(r["pid"]): int(r["rows"]) for r in per_part}
+        per_part = (
+            out.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(F.count("*").alias("rows"))
+            .collect()
+        )
+        man["partitions"] = {int(r["pid"]): int(r["rows"]) for r in per_part}
         man["wall_sec"] = round(time.time() - t0, 3)
         with open(manifest_path, "w") as f:
             json.dump(man, f, indent=1)
@@ -210,42 +216,18 @@ class CheckpointManager:
         return out
 
     def materializer(self):
-        """Handle for OPERATOR-INTERNAL lineage cuts (CC rounds, LSH
-        key tables, greedy-fixpoint state): parquet subdirs under
-        ``<root>/_op_stages`` when a checkpoint root exists (the
-        fault-tolerant production shape), DISK_ONLY localCheckpoint
-        otherwise. These cuts are transient scratch — they carry no
-        resume token and are rewritten on every run.
+        """Scratch for OPERATOR-INTERNAL lineage cuts (CC rounds, LSH
+        key tables, greedy-fixpoint state): a fresh ScopedMaterializer
+        per call, under ``<root>/_op_stages`` when a checkpoint root
+        exists (the fault-tolerant production shape), on the discovered
+        scratch root otherwise. These cuts are transient — they carry
+        no resume token and are rewritten on every run. Call once per
+        operator invocation (plans/materialize.py)."""
+        from .materialize import ScopedMaterializer
 
-        Every call returns a FRESH ``inv_<n>`` namespace (r5 review —
-        mirroring materialize.py's per-invocation design): isolation in
-        both directions is load-bearing. Unique subdirs mean two
-        invocations cutting the same hint (e.g. two CC runs cutting
-        'cc_round') can never overwrite each other's live scratch, and
-        keep_per_name retention only deletes cuts WITHIN one
-        invocation — a shared-counter design lets invocation 2's
-        cc_round_005 retention-delete invocation 1's still-live
-        cc_round_004 (the exact 3+-invocation failure materialize.py
-        documents). Call once per operator invocation."""
-        from .materialize import parquet_materializer, resolve
-
-        if self.root is None:
-            # scratch-aware default: resolve(None) already allocates a
-            # fresh per-invocation namespace per call
-            return resolve(None)
-        scratch = os.path.join(self.root, "_op_stages")
-        if not getattr(self, "_op_stages_wiped", False):
-            # wipe prior-RUN orphans once per manager (a shorter re-run
-            # would otherwise leave higher-suffix round dirs behind
-            # forever); never mid-run — a later wipe could delete
-            # scratch that an earlier invocation's live frames read.
-            import shutil
-
-            shutil.rmtree(scratch, ignore_errors=True)
-            self._op_stages_wiped = True
-        n = getattr(self, "_op_inv_n", 0)
-        self._op_inv_n = n + 1
-        return parquet_materializer(os.path.join(scratch, f"inv_{n:04d}"))
+        return ScopedMaterializer(
+            root=None if self.root is None else os.path.join(self.root, "_op_stages")
+        )
 
     def put_json(self, name: str, payload: str) -> None:
         if self.root is None:

@@ -1,37 +1,46 @@
-"""Injectable stage materialization for operator-internal lineage cuts.
+"""Operator-internal lineage cuts, and the one type that owns their scratch.
 
-Iterative operators (CC rounds, the greedy 1:1 fixpoint) and
-HOF-expression producers (minhash band arrays, gram sets, simhash
-fingerprints) must cut lineage mid-operator: the plan would otherwise
-grow unboundedly / re-inline generator expressions pathologically (see
-functions/minhash.py plan-size note). HOW that cut happens is a
-deployment decision, so every operator takes an optional
-``materializer`` callback instead of hard-coding one:
+Iterative operators (CC rounds, the greedy 1:1 fixpoint, the link_two
+pair and score cuts) and HOF-expression producers (minhash band arrays,
+gram sets, simhash fingerprints) must cut lineage mid-operator: the plan
+would otherwise grow unboundedly / re-inline generator expressions
+pathologically (see functions/minhash.py plan-size note). Every operator
+takes an optional ``materializer(df, name) -> DataFrame`` callback;
+``name`` is a short stage hint. ``resolve(None)`` supplies the default.
 
-- scratch-aware default (no materializer passed): discovers a parquet
-  scratch root — ``spark.fastlink.scratchDir`` conf first (the knob for
-  real clusters; any Hadoop URI), else ``spark.local.dir``/tmp when the
-  master is local[*] — and cuts through ``parquet_materializer``.
-  Falls back to DISK_ONLY localCheckpoint only on a cluster master
-  with no conf set (no shared path is knowable there).
-- ``disk_only``: ``localCheckpoint(eager=True, storageLevel=
-  DISK_ONLY)``. The DEFAULT deserialized (MEMORY_AND_DISK)
-  localCheckpoint measurably ANTI-SCALES in a many-thread local block
-  manager (132-145 s vs 45.5 s parquet for the same 16.7M-row stage —
-  BENCH/BASELINE.md forensics), and pins large intermediates in
-  executor memory; DISK_ONLY serialized blocks avoid both. Still NOT
-  fault-tolerant on a real cluster (executor loss loses the block).
-- ``parquet_materializer(root)``: writes each cut to a parquet subdir
-  and reads it back — the production shape (an Iceberg table write on a
-  real cluster): fault-tolerant, splittable, off-heap. The pipeline's
-  CheckpointManager passes this through to the operators it calls.
+``ScopedMaterializer`` is the only place that decides where cuts go:
 
-Signature: ``materializer(df, name) -> DataFrame`` where ``name`` is a
-short stage hint (unique-ified by the parquet materializer).
+- Namespace: at its first cut it allocates a fresh ``inv_<n>``
+  directory under its root and writes every cut there through
+  ``parquet_materializer``. Isolation per invocation is load-bearing in
+  both directions: two invocations cutting the same hint can never
+  overwrite each other's live scratch, and retention only ever deletes
+  cuts WITHIN one namespace, so a later call can't delete the parquet
+  backing a DataFrame a caller still holds from an earlier one.
+- Root: the one given (``CheckpointManager.materializer()`` passes
+  ``<checkpoint root>/_op_stages``), else the discovered scratch root
+  (``_discover_root``: ``spark.fastlink.scratchDir`` conf, then
+  ``spark.local.dir``/tmp on a local[*] master). On a cluster master
+  with no conf there is no shared path, and cuts fall back to
+  ``disk_only``.
+- Retention: the newest ``KEEP_PER_NAME`` cuts of each name survive.
+- Cleanup: ``close()`` deletes the namespace (idempotent; the next cut
+  reopens a fresh one). Namespaces that are never closed go with their
+  root: the discovered local root is removed by an atexit hook, a
+  checkpoint root's ``_op_stages`` is wiped by the next manager on it.
+
+``disk_only`` (``localCheckpoint(eager=True, storageLevel=DISK_ONLY)``)
+is the last resort: the DEFAULT deserialized (MEMORY_AND_DISK)
+localCheckpoint measurably ANTI-SCALES in a many-thread local block
+manager (132-145 s vs 45.5 s parquet for the same 16.7M-row stage —
+BENCH/BASELINE.md forensics) and pins large intermediates in executor
+memory; DISK_ONLY serialized blocks avoid both, but are still NOT
+fault-tolerant on a real cluster (executor loss loses the block).
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 from collections.abc import Callable
 
@@ -40,13 +49,20 @@ from pyspark.sql import DataFrame
 
 Materializer = Callable[[DataFrame, str], DataFrame]
 
+# cuts kept on disk per name within one namespace (see parquet_materializer)
+KEEP_PER_NAME = 2
+
 
 def disk_only(df: DataFrame, name: str = "") -> DataFrame:
     """Last-resort lineage cut: serialized DISK_ONLY localCheckpoint.
     NOT fault-tolerant on a real cluster (executor loss loses the
-    block) — the scratch-aware default below prefers parquet whenever
-    it can discover a usable directory."""
+    block) — ScopedMaterializer prefers parquet whenever it can
+    discover a usable directory."""
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+
+def _join(root: str, name: str) -> str:
+    return f"{root}/{name}" if "://" in root else os.path.join(root, name)
 
 
 def _rm_path(spark, path: str) -> None:
@@ -76,56 +92,49 @@ def _rm_path(spark, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
-def parquet_materializer(root: str, keep_per_name: int = 2) -> Materializer:
+def parquet_materializer(root: str) -> Materializer:
     """Production-shape cut: parquet write + read-back under ``root``
     (any Hadoop-compatible URI — a local dir here, an object-store
     prefix / Iceberg scratch namespace on a cluster). Repeated cuts
     with the same name get an incrementing suffix (an operator may cut
     several rounds under one hint).
 
-    Retention: only the newest ``keep_per_name`` cuts of each name are
-    kept on disk — when cut N is written, cut N-keep is deleted. An
-    iterative operator's round N-2 data fed round N-1's write and
-    nothing reads it afterwards, so without this a 15-round CC would
-    hold 15 full edge-set copies of dead scratch. Contract: a cut's
-    returned DataFrame must not be re-read after ``keep_per_name``
+    Retention: only the newest ``KEEP_PER_NAME`` cuts of each name are
+    kept on disk — when cut N is written, cut N-KEEP_PER_NAME is
+    deleted. An iterative operator's round N-2 data fed round N-1's
+    write and nothing reads it afterwards, so without this a 15-round
+    CC would hold 15 full edge-set copies of dead scratch. Contract: a
+    cut's returned DataFrame must not be re-read after KEEP_PER_NAME
     newer cuts of the SAME name (iterative operators roll their
     accumulators through retained cuts — see dedupe_matches)."""
     counts: dict[str, int] = {}
-    join = (lambda *p: "/".join(p)) if "://" in root else os.path.join
 
     def mat(df: DataFrame, name: str = "") -> DataFrame:
         base = name or "stage"
         idx = counts.get(base, 0)
         counts[base] = idx + 1
-        path = join(root, f"{base}_{idx:03d}")
+        path = _join(root, f"{base}_{idx:03d}")
         df.write.mode("overwrite").parquet(path)
         out = df.sparkSession.read.parquet(path)
-        old = idx - keep_per_name
+        old = idx - KEEP_PER_NAME
         if old >= 0:
-            _rm_path(df.sparkSession, join(root, f"{base}_{old:03d}"))
+            _rm_path(df.sparkSession, _join(root, f"{base}_{old:03d}"))
         return out
 
     return mat
 
 
-# per-app scratch state: (root-or-None, invocation counter). The root
-# is discovered once per application; every resolve(None) call — i.e.
-# every OPERATOR INVOCATION — gets its own inv_<n> subdirectory and
-# fresh suffix counters. Isolation in BOTH directions is load-bearing:
-# unique subdirs mean two invocations cutting the same hint can never
-# overwrite each other's live scratch, and retention (keep_per_name)
-# only ever deletes cuts WITHIN one invocation — a later bare
-# `dedupe_matches()` call can't delete the parquet backing the
-# DataFrame a caller still holds from an earlier call (cuts of the
-# SAME name never span invocations; the old shared-counter design
-# broke exactly that way at 3+ invocations).
-_app_scratch: dict[str, dict] = {}
+# applicationId -> discovered scratch root (None: no usable root)
+_app_roots: dict[str, str | None] = {}
+# scratch root -> namespace numbers; per root, so the numbers under one
+# root never repeat within a process (setdefault and next() on a count
+# are single C calls, so concurrent allocations can't collide)
+_namespaces: dict[str, itertools.count] = {}
 
 
-def _discover_root(df: DataFrame) -> str | None:
-    """Scratch root for operators called WITHOUT an explicit
-    materializer:
+def _discover_root(spark) -> str | None:
+    """Scratch root for cuts without an explicit root, discovered once
+    per application:
 
     1. ``spark.fastlink.scratchDir`` conf (any Hadoop URI — THE knob to
        set on a real cluster, where executor-local paths aren't shared)
@@ -141,12 +150,10 @@ def _discover_root(df: DataFrame) -> str | None:
        non-fault-tolerant, documented here rather than silently writing
        to paths executors can't all see.
     """
-    spark = df.sparkSession
     sc = spark.sparkContext
     app = sc.applicationId
-    state = _app_scratch.get(app)
-    if state is not None:
-        return state["root"]
+    if app in _app_roots:
+        return _app_roots[app]
     try:
         root = spark.conf.get("spark.fastlink.scratchDir")
     except Exception:
@@ -178,55 +185,36 @@ def _discover_root(df: DataFrame) -> str | None:
             scratch = None
     else:
         scratch = None
-    _app_scratch[app] = {"root": scratch, "n": 0}
+    _app_roots[app] = scratch
     return scratch
 
 
-def _new_invocation_dir(df: DataFrame) -> str | None:
-    """Allocate a fresh inv_<n> scratch namespace (None -> no usable
-    root, caller falls back to disk_only)."""
-    root = _discover_root(df)
-    if root is None:
-        return None
-    state = _app_scratch[df.sparkSession.sparkContext.applicationId]
-    inv = state["n"]
-    state["n"] = inv + 1
-    join = (lambda *p: "/".join(p)) if "://" in root else os.path.join
-    return join(root, f"inv_{inv:04d}")
-
-
-def _invocation_materializer(df: DataFrame) -> Materializer:
-    inv_dir = _new_invocation_dir(df)
-    if inv_dir is None:
-        return disk_only
-    return parquet_materializer(inv_dir)
-
-
 class ScopedMaterializer:
-    """An invocation-scoped scratch materializer with an EXPLICIT
-    ``close()``. ``resolve(None)``'s namespaces are only reclaimed by
-    the atexit hook at JVM exit — fine for a one-shot batch job, but a
-    long-running streaming driver calling an operator per micro-batch
-    would accumulate a parquet copy of every batch's intermediates
-    until shutdown (ADVICE r4). A caller that knows its cuts' lifetime
-    (e.g. IncrementalLinker.process_batch: nothing re-reads the cuts
-    after the state commit) creates one of these per unit of work and
-    closes it when done. close() is idempotent; a call after close
-    lazily re-opens a fresh namespace."""
+    """One invocation's scratch: a fresh ``inv_<n>`` parquet namespace
+    under ``root`` (default: the discovered scratch root), bound lazily
+    at the first cut to that frame's Spark session. Callers that know
+    their cuts' lifetime (e.g. IncrementalLinker.process_batch: nothing
+    re-reads the cuts after the state commit) ``close()`` it when done,
+    so a long-running driver doesn't keep every batch's intermediates
+    until JVM exit. close() is idempotent; a cut after close reopens a
+    fresh namespace."""
 
-    def __init__(self, spark):
-        self._spark = spark
+    def __init__(self, root: str | None = None):
+        self._root = root
+        self._spark = None
         self._inv_dir: str | None = None
         self._mat: Materializer | None = None
 
     def __call__(self, df: DataFrame, name: str = "") -> DataFrame:
         if self._mat is None:
-            self._inv_dir = _new_invocation_dir(df)
-            self._mat = (
-                disk_only
-                if self._inv_dir is None
-                else parquet_materializer(self._inv_dir)
-            )
+            self._spark = df.sparkSession
+            root = self._root if self._root is not None else _discover_root(self._spark)
+            if root is None:
+                self._mat = disk_only
+            else:
+                n = next(_namespaces.setdefault(root, itertools.count()))
+                self._inv_dir = _join(root, f"inv_{n:04d}")
+                self._mat = parquet_materializer(self._inv_dir)
         return self._mat(df, name)
 
     def close(self) -> None:
@@ -238,17 +226,5 @@ class ScopedMaterializer:
 
 def resolve(materializer: Materializer | None) -> Materializer:
     """Explicit materializer passes through; None returns a fresh
-    scratch-default bound lazily (at first cut) to its own per-
-    invocation namespace."""
-    if materializer is not None:
-        return materializer
-    state: dict = {}
-
-    def scratch_default(df: DataFrame, name: str = "") -> DataFrame:
-        mat = state.get("mat")
-        if mat is None:
-            mat = _invocation_materializer(df)
-            state["mat"] = mat
-        return mat(df, name)
-
-    return scratch_default
+    ScopedMaterializer on the discovered scratch root."""
+    return materializer if materializer is not None else ScopedMaterializer()

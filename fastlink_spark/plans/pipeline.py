@@ -21,9 +21,10 @@ codegen except the one Arrow-batched JW UDF per string field.
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,31 +75,15 @@ class LinkageConfig:
     # to dense longs (operators.cluster.dense_long_ids).
     wide_rec_id: bool = False
     checkpoint_dir: str | None = None
-    extra: dict = dc_field(default_factory=dict)
 
     def token(self) -> str:
-        blob = json.dumps(
-            {
-                "fields": [(f.name, f.kind, f.cut_full, f.cut_partial) for f in self.fields],
-                "threshold": self.threshold,
-                "p_m": self.p_m,
-                "tol": self.tol,
-                "blocks": [
-                    self.use_host_block,
-                    self.use_minhash_block,
-                    self.shingle_w,
-                    self.bands,
-                    self.rows_per_band,
-                    self.skew_threshold,
-                    self.target_block,
-                    self.refine_host_above,
-                ],
-                "sample": self.sample_fraction,
-                "deterministic": list(self.deterministic_fields),
-                "wide_rec_id": self.wide_rec_id,
-            },
-            sort_keys=True,
-        )
+        """Hash of every field that shapes the result — all of them but
+        ``checkpoint_dir``, which only says where to write. Built from
+        the dataclass fields so a new knob can't be left out of the
+        resume key (stages, and the EM fit, resume under this token)."""
+        knobs = dataclasses.asdict(self)
+        del knobs["checkpoint_dir"]
+        blob = json.dumps(knobs, sort_keys=True)
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
@@ -172,12 +157,11 @@ def matched_from_zeta(
     scored: DataFrame,
     zeta_df: DataFrame,
     gcols: list[str],
-    cfg: "LinkageConfig | None" = None,
     *,
+    threshold: float,
+    deterministic_fields: tuple[str, ...] = (),
     id_a: str = "a_rec_id",
     id_b: str = "b_rec_id",
-    threshold: float | None = None,
-    deterministic_fields: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """THE matched-pair rule — one definition shared by the batch
     pipeline, the incremental linker, state compaction, and the
@@ -189,20 +173,15 @@ def matched_from_zeta(
     unique per (id_a, id_b) — every producer dedupes on that key — so
     one projected pass emits the same byte-stable pair list the old
     two-branch union+groupBy(max) shape did, minus one full scan of the
-    pair stream and one exchange. Pass a cfg (dedupe pipeline) or the
-    explicit threshold/deterministic_fields knobs (two-table mode)."""
-    thr = cfg.threshold if cfg is not None else threshold
-    det_fields = (
-        cfg.deterministic_fields if cfg is not None else (deterministic_fields or ())
-    )
+    pair stream and one exchange."""
     cond = None
     for c in gcols:
         eq = scored[c].eqNullSafe(zeta_df[c])
         cond = eq if cond is None else (cond & eq)
-    if not det_fields:
+    if not deterministic_fields:
         return (
             scored.join(F.broadcast(zeta_df), cond, "inner")
-            .where(F.col("zeta") >= thr)
+            .where(F.col("zeta") >= threshold)
             .select(id_a, id_b, "zeta")
         )
     # ONE pass over the pair stream (r8 optimization — guide §2.3/§2.4):
@@ -218,7 +197,7 @@ def matched_from_zeta(
     # zeta_df (impossible when zeta_df covers the observed patterns, as
     # every caller's does): such a pair survives iff deterministic.
     det_cond = None
-    for f in det_fields:
+    for f in deterministic_fields:
         eq = (
             F.col(f"a_{f}").isNotNull()
             & F.col(f"b_{f}").isNotNull()
@@ -228,7 +207,7 @@ def matched_from_zeta(
     det_flag = F.coalesce(det_cond, F.lit(False))
     return (
         scored.join(F.broadcast(zeta_df), cond, "left")
-        .where((F.col("zeta") >= thr) | det_flag)
+        .where((F.col("zeta") >= threshold) | det_flag)
         .select(
             id_a,
             id_b,
@@ -376,10 +355,8 @@ def link_dedupe(
     # the stale EM fit — silently scoring new data with old m/u/lambda.
     # A fingerprint bump also retires any pre-r5 checkpoint written
     # under the old sample_fraction=1.0 perturbed-fit semantics.
-    import hashlib as _hashlib
-
     _fp = ckpt.fingerprints.get("pairs_gamma", "")
-    em_key = f"em_{cfg.token()}_{_hashlib.md5(_fp.encode()).hexdigest()[:12]}"
+    em_key = f"em_{cfg.token()}_{hashlib.md5(_fp.encode()).hexdigest()[:12]}"
     em_json = ckpt.get_json(em_key)
     if em_json is not None:
         em = em_mod.EMResult.from_json(em_json)
@@ -420,7 +397,13 @@ def link_dedupe(
     zeta_df = zeta_pattern_df(spark, scored_patterns, gcols)
     matched = ckpt.stage(
         "matched_pairs",
-        lambda: matched_from_zeta(scored, zeta_df, gcols, cfg),
+        lambda: matched_from_zeta(
+            scored,
+            zeta_df,
+            gcols,
+            threshold=cfg.threshold,
+            deterministic_fields=cfg.deterministic_fields,
+        ),
         inputs=("pairs_gamma",),
     )
 

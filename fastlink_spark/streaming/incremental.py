@@ -369,7 +369,7 @@ class IncrementalLinker:
         # accumulated a parquet copy of every batch's intermediates).
         # Closing is safe because the returned DataFrame is re-read
         # from the COMMITTED state segment, not from scratch.
-        mat = ScopedMaterializer(self.spark)
+        mat = ScopedMaterializer()
         try:
             return self._process_batch_inner(
                 new_pages, batch_id, manifest, seq, mat
@@ -463,7 +463,16 @@ class IncrementalLinker:
             # prune-key scan, the partner join AND the conflict check —
             # three consumers of one gamma-scored plan.
             zdf = zeta_pattern_df(self.spark, apply_em(patt, self.em), gcols)
-            matched = mat(matched_from_zeta(scored, zdf, gcols, cfg), "matched")
+            matched = mat(
+                matched_from_zeta(
+                    scored,
+                    zdf,
+                    gcols,
+                    threshold=cfg.threshold,
+                    deterministic_fields=cfg.deterministic_fields,
+                ),
+                "matched",
+            )
         walls["matched"] = round(time.time() - t0, 3)
         t0 = time.time()
 
@@ -673,7 +682,7 @@ class IncrementalLinker:
         cfg = self.cfg
         fields = list(cfg.fields)
         gcols = [f"gamma_{f.name}" for f in fields]
-        mat = ScopedMaterializer(self.spark)
+        mat = ScopedMaterializer()
         try:
             return self._compact_inner(manifest, records, cfg, fields, gcols, mat)
         finally:
@@ -711,9 +720,13 @@ class IncrementalLinker:
         patt = gammas.pattern_counts(scored, fields).toPandas()
         if len(patt):
             zdf = zeta_pattern_df(self.spark, apply_em(patt, self.em), gcols)
-            edges = matched_from_zeta(scored, zdf, gcols, cfg).select(
-                "a_rec_id", "b_rec_id"
-            )
+            edges = matched_from_zeta(
+                scored,
+                zdf,
+                gcols,
+                threshold=cfg.threshold,
+                deterministic_fields=cfg.deterministic_fields,
+            ).select("a_rec_id", "b_rec_id")
         else:
             edges = records.select(
                 F.col("rec_id").alias("a_rec_id")

@@ -73,3 +73,15 @@ def test_config_change_invalidates_checkpoint(spark, tmp_path):
     r2 = link_dedupe(spark, pages, LinkageConfig(checkpoint_dir=ck, threshold=0.9))
     # threshold participates in the config token -> matched_pairs must rebuild
     assert r2.metrics["matched_pairs"]["resumed"] is False
+
+
+def test_iter_max_change_refits_em_on_resume(spark, tmp_path):
+    fx = generate_pages(n_base=40)
+    pages = spark.createDataFrame(fx.pages)
+    ck = str(tmp_path / "ckpt_iter")
+    r1 = link_dedupe(spark, pages, LinkageConfig(checkpoint_dir=ck, iter_max=1))
+    assert r1.em.iterations == 1
+    # iter_max participates in the config token -> the one-iteration
+    # EM fit in the same checkpoint dir must not be served again
+    r2 = link_dedupe(spark, pages, LinkageConfig(checkpoint_dir=ck))
+    assert r2.em.iterations > 1

@@ -66,7 +66,7 @@ def test_name_reweight_renorm_no_driver_collect(spark, monkeypatch):
 
 def test_greedy_dedupe_with_parquet_retention(spark, tmp_path):
     """Multi-round greedy 1:1 assignment under a parquet materializer
-    with keep_per_name=2: the accepted union must roll through retained
+    (KEEP_PER_NAME=2 retention): the accepted union must roll through retained
     cuts so no round's output references deleted parquet. The chain
     a1>a2>a3>a4 forces one acceptance per round (3+ productive rounds,
     which deletes the round-0 'greedy_mutual' dir before the end)."""
@@ -81,7 +81,7 @@ def test_greedy_dedupe_with_parquet_retention(spark, tmp_path):
         if i < 4:
             rows.append((i + 1, i, score - 0.005 - 0.01 * i))
     pairs = spark.createDataFrame(rows, "a_rec_id long, b_rec_id long, zeta double")
-    mat = parquet_materializer(str(tmp_path), keep_per_name=2)
+    mat = parquet_materializer(str(tmp_path))
     out = dedupe_matches(pairs, materializer=mat).collect()
     got = {(r["a_rec_id"], r["b_rec_id"]) for r in out}
     assert got == {(i, i) for i in range(5)}
@@ -104,7 +104,7 @@ def test_checkpoint_manager_isolates_invocations(spark, tmp_path):
     df = spark.range(3)
     out1 = m1(df, "cut")
     m2(df, "cut")
-    # 3 more cuts under the same hint in invocation 2: keep_per_name
+    # 3 more cuts under the same hint in invocation 2: KEEP_PER_NAME
     # retention must only touch inv_0001's own cuts
     for _ in range(3):
         m2(df, "cut")
@@ -130,8 +130,7 @@ def test_bare_operator_uses_parquet_scratch(spark):
     out = connected_components(edges).collect()
     assert len({r["cluster_id"] for r in out}) == 1  # one chain
     app = spark.sparkContext.applicationId
-    state = materialize._app_scratch.get(app)
-    assert state is not None and state["root"] is not None
+    assert materialize._app_roots.get(app) is not None
     import tempfile
 
     scratch = os.path.join(tempfile.gettempdir(), f"fastlink_scratch_{app}")
@@ -153,7 +152,7 @@ def test_scratch_conf_key_overrides(spark, tmp_path):
     from fastlink_spark.plans import materialize
 
     app = spark.sparkContext.applicationId
-    old = materialize._app_scratch.pop(app, None)
+    old = materialize._app_roots.pop(app, None)
     spark.conf.set("spark.fastlink.scratchDir", str(tmp_path))
     try:
         df = spark.range(5)
@@ -164,16 +163,16 @@ def test_scratch_conf_key_overrides(spark, tmp_path):
         assert invs and "confcut_000" in os.listdir(os.path.join(sub, invs[0]))
     finally:
         spark.conf.unset("spark.fastlink.scratchDir")
-        materialize._app_scratch.pop(app, None)
+        materialize._app_roots.pop(app, None)
         if old is not None:
-            materialize._app_scratch[app] = old
+            materialize._app_roots[app] = old
 
 
 def test_scratch_invocations_isolated_from_retention(spark):
     """Three bare operator invocations cutting the SAME hint must not
     delete each other's scratch: the first invocation's returned
     DataFrame is still readable after two later invocations write two
-    newer cuts of that name (the keep_per_name=2 deletion horizon)."""
+    newer cuts of that name (the KEEP_PER_NAME=2 deletion horizon)."""
     from fastlink_spark.plans import materialize
 
     outs = []

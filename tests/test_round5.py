@@ -256,7 +256,7 @@ def test_cluster_match_pandas_path_null_vec_matches_codegen(spark, monkeypatch):
 def test_scoped_materializer_releases_scratch(spark):
     from fastlink_spark.plans.materialize import ScopedMaterializer
 
-    mat = ScopedMaterializer(spark)
+    mat = ScopedMaterializer()
     df = spark.range(10)
     out = mat(df, "cut")
     assert out.count() == 10
@@ -275,7 +275,7 @@ def test_process_batch_leaves_no_scratch_behind(spark, tmp_path):
     """ADVICE r4 medium: a long-running stream must not accumulate an
     inv_<n> parquet namespace per batch until JVM exit. After N batches
     the scratch root holds no more invocation dirs than before."""
-    from fastlink_spark.plans.materialize import _app_scratch
+    from fastlink_spark.plans.materialize import _app_roots
     from fastlink_spark.plans.pipeline import LinkageConfig
     from fastlink_spark.streaming.incremental import IncrementalLinker
 
@@ -285,7 +285,7 @@ def test_process_batch_leaves_no_scratch_behind(spark, tmp_path):
     linker.process_batch(
         _mk_pages4(spark, [("https://hostone.example.com/a", "t", t1)])
     )
-    root = _app_scratch[spark.sparkContext.applicationId]["root"]
+    root = _app_roots[spark.sparkContext.applicationId]
     assert root is not None
     before = {d for d in os.listdir(root) if d.startswith("inv_")}
     for i in range(3):
